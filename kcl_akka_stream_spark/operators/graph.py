@@ -1,7 +1,7 @@
 """Iterative graph algorithms over DataFrames (PageRank).
 
 The third iterative operator family next to connected components
-(operators/dedup.py pointer-jumping) and Lloyd's k-means
+(operators/dedup.py) and Lloyd's k-means
 (operators/clustering.py): rank propagation with a damping factor
 (Brin & Page 1998, public).  Spark-first form: the edge list is a
 DataFrame reused every round (cache it), each iteration is ONE
@@ -559,40 +559,21 @@ def bfs_distance(
     ``rounds``, unreached nodes are absent.
 
     Input: directed (src, dst) with the symmetrized contract of
-    ``pagerank`` for undirected graphs.  Each round is one edge-keyed
-    join against the (node-sized, checkpointed) frontier relation
-    (shuffled by default; ``broadcast_scores=True`` opts into the
-    broadcast when the reached set provably fits -- see
-    ``_maybe_bcast``) plus a min-combine -- distance labels stay node-sized, the edge relation
-    is checkpointed once; monotone (min of a growing set), so extra
-    rounds past the diameter are no-ops.
+    ``pagerank`` for undirected graphs.  This is ``weighted_distance``
+    over unit edge costs: the same min-plus relaxation, checkpoint and
+    broadcast discipline; monotone, so extra rounds past the diameter
+    are no-ops.
 
     Returns (node, dist) with dist in [0, rounds].
     """
     if not seeds:
         raise ValueError("bfs_distance requires at least one seed")
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    spark = e.sparkSession
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in seeds], "node long, dist long"
+    return weighted_distance(
+        edges.select("src", "dst", F.lit(1).alias("cost")),
+        seeds,
+        rounds,
+        broadcast_scores,
     )
-    for _ in range(rounds):
-        # One combinable min-aggregation per round: the relaxed edge-sized
-        # relation unions with the standing node-sized distances and a
-        # single hash aggregate takes the min (min over the union equals
-        # min over per-key pre-mins, and the partial map-side combine does
-        # the same reduction the old inner groupBy("dst") paid a second
-        # exchange for).
-        reached = e.join(
-            _maybe_bcast(dist, broadcast_scores), e.src == dist.node
-        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
 
 
 def weighted_distance(
@@ -629,11 +610,12 @@ def weighted_distance(
         [(int(s), 0) for s in seeds], "node long, dist long"
     )
     for _ in range(rounds):
-        # Single min-aggregation per round (see bfs_distance): the union
-        # of the standing distances with the un-preaggregated relaxations
-        # feeds ONE combinable hash aggregate -- the old inner
-        # groupBy("dst") min paid a second exchange for the same map-side
-        # reduction.
+        # One combinable min-aggregation per round: the relaxed edge-sized
+        # relation unions with the standing node-sized distances and a
+        # single hash aggregate takes the min (min over the union equals
+        # min over per-key pre-mins, and the partial map-side combine does
+        # the same reduction an inner groupBy("dst") would pay a second
+        # exchange for).
         relaxed = e.join(
             _maybe_bcast(dist, broadcast_scores), e.src == dist.node
         ).select(
@@ -651,8 +633,8 @@ def weighted_distance(
 
 #: hits() hard bound: unnormalized int64 scores grow ~(mean weighted
 #: degree)^2 per round -- past this many rounds a dense graph can silently
-#: overflow, so the operator RAISES instead of returning garbage (the same
-#: guard style connected_components uses for max_iterations).
+#: overflow, so the operator RAISES instead of returning garbage (as
+#: connected_components raises rather than return half-merged labels).
 HITS_MAX_ITERATIONS = 4
 
 

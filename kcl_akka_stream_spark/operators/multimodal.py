@@ -197,7 +197,9 @@ def payload_simhash(
         def bits_of(g: bytes):
             v = gram_bits.get(g)
             if v is None:
-                h = hashlib.md5(g).hexdigest().encode()
+                # numpy S{gram} scalars drop trailing NULs: hash the full
+                # fixed-width gram, as the per-window slice does
+                h = hashlib.md5(g.ljust(gram, b"\0")).hexdigest().encode()
                 v = np.frombuffer(
                     bytes(1 if h[i] in highs else 0 for i in range(bits)),
                     dtype=np.uint8,

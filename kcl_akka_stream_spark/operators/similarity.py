@@ -269,7 +269,6 @@ def semantic_dedup(
     n_clusters: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_iterations: int = 25,
     cluster_col: str | None = None,
     target_cluster_size: int | None = None,
 ) -> DataFrame:
@@ -288,8 +287,8 @@ def semantic_dedup(
     ``n_clusters`` must grow with the corpus (k = n / target cluster
     size -- SemDeDup runs ~100k clusters at web scale) exactly like
     ``auto_lsh_dims`` grows the near-dup blocking; the component pass is
-    O(log diameter) pointer jumping.  No stage shuffles the corpus more
-    than once on a key.
+    ``connected_components`` over the pair graph.  No stage shuffles the
+    corpus more than once on a key.
 
     Pass ``cluster_col`` to reuse an EXISTING cluster assignment (e.g.
     the corpus persisted by ``ivf_build`` — the same learned quantizer)
@@ -305,7 +304,7 @@ def semantic_dedup(
     k=8 vs ~flat for the auto mode); the learned-quantizer mode exists
     for oracle-pinned gates and pre-clustered corpora, the auto mode is
     the 100 TB default."""
-    from kcl_akka_stream_spark.operators.dedup import connected_components_fast
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     if cluster_col is not None:
         withc = corpus.withColumn("sem_cluster", F.col(cluster_col))
@@ -322,9 +321,9 @@ def semantic_dedup(
             id_col, vec_col, F.col("cluster_id").alias("sem_cluster")
         )
     pairs = _semantic_pairs(withc, threshold, id_col, vec_col)
-    comps = connected_components_fast(
-        pairs, withc.select(id_col), id_col=id_col, max_iterations=max_iterations
-    ).select(id_col, F.col("cluster_id").alias("dup_group"))
+    comps = connected_components(pairs, withc.select(id_col), id_col=id_col).select(
+        id_col, F.col("cluster_id").alias("dup_group")
+    )
     return (
         withc.select(id_col, "sem_cluster")
         .join(comps, id_col)

@@ -454,7 +454,7 @@ def _semantic_dedup_oracle(threshold: float = 0.4, n_clusters: int = 8) -> str:
 @query("dedup_semantic", _semantic_dedup_oracle())
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SemDeDup-style semantic dedup: learned-quantizer clusters, within-
-    # cluster cosine pairs, pointer-jumping components, lowest-id
+    # cluster cosine pairs, connected components, lowest-id
     # representative per duplicate group.  Reuses the PERSISTED IVF index
     # (same quantizer, built once per fixture) instead of re-learning the
     # clustering per call -- cluster offline once, dedup against the
@@ -856,8 +856,9 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cluster->keeper step every dedup pipeline ends with: connected
     # components over the LSH candidate pairs (iterative min-label
-    # propagation; operators/dedup.py::connected_components), checked
-    # against a recursive-CTE transitive closure.
+    # propagation, pointer jumps once the round budget is spent;
+    # operators/dedup.py::connected_components), checked against a
+    # recursive-CTE transitive closure.
     docs = tbl(spark, sf_dir, "documents")
     buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
     pairs = D.minhash_candidate_pairs(buckets)
@@ -866,14 +867,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_clusters_fast", _clusters_oracle())
 def dedup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same cluster assignment through the pointer-jumping variant
-    # (O(log diameter) rounds -- operators/dedup.py::
-    # connected_components_fast): both implementations must agree with
-    # the recursive-CTE transitive closure, so the oracle is shared.
+    # Registered twin of dedup_clusters (same body, same recursive-CTE
+    # oracle), kept because the HEADLINE query set is frozen.
     docs = tbl(spark, sf_dir, "documents")
     buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
     pairs = D.minhash_candidate_pairs(buckets)
-    return D.connected_components_fast(pairs, docs.select("doc_id"))
+    return D.connected_components(pairs, docs.select("doc_id"))
 
 
 @query(
@@ -4819,16 +4818,16 @@ def pipeline_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The curation step after clustering: every near-dup cluster keeps
     # exactly ONE representative -- the longest doc (quality proxy), ties
     # to the smallest doc_id -- and the rest are marked for drop.  Spark
-    # side composes connected components (pointer jumping) with one
+    # side composes connected components with one
     # cluster-keyed window; the oracle re-derives clusters via the
     # recursive-CTE transitive closure and applies the same rule.
     docs = tbl(spark, sf_dir, "documents")
     buckets = D.minhash_lsh_buckets(docs, num_hashes=8, bands=4, k=3)
     pairs = D.minhash_candidate_pairs(buckets)
-    # Plain min-label CC, not pointer jumping: LSH dup clusters are
-    # shallow near-cliques, so the jump's extra label-of-label self-join
-    # per round costs more than the rounds it saves (ABBA at sf0.1:
-    # 3.73 -> 3.15 s; identical labels, collect-compared).
+    # LSH dup clusters are shallow near-cliques: CC converges in its
+    # plain min-label rounds and never reaches the pointer-jump phase,
+    # whose label-of-label self-join costs more than the rounds it saves
+    # on such graphs (ABBA at sf0.1: 3.73 -> 3.15 s).
     clusters = D.connected_components(pairs, docs.select("doc_id"))
     j = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
@@ -12442,13 +12441,15 @@ def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
             for d in dims
         }
         # ADVICE r15 #4: Python ints are exact where Spark's bigint sum
-        # would wrap -- assert the bound so the "bit-for-bit equivalent
+        # would wrap -- enforce the bound so the "bit-for-bit equivalent
         # to the all-Spark plan" claim stays checkable rather than
-        # silently diverging on overflow-scale covariances.
-        assert all(-(1 << 63) <= x < (1 << 63) for x in w.values()), (
-            "emb_power_iteration_pc1: w exceeds int64; the Spark-"
-            "equivalence claim no longer holds for this input scale"
-        )
+        # silently diverging on overflow-scale covariances (a raise, not
+        # an assert, so it survives ``python -O``).
+        if not all(-(1 << 63) <= x < (1 << 63) for x in w.values()):
+            raise OverflowError(
+                "emb_power_iteration_pc1: w exceeds int64; the Spark-"
+                "equivalence claim no longer holds for this input scale"
+            )
         mx = max(abs(x) for x in w.values())
         dstar = min(d for d in dims if abs(w[d]) == mx)
         sg = 1 if w[dstar] >= 0 else -1

@@ -32,7 +32,7 @@ micro-batches.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -82,26 +82,6 @@ OUTPUT_SCHEMA = StructType(
 EVICTING_OUTPUT_SCHEMA = StructType(
     OUTPUT_SCHEMA.fields + [StructField("evicted_count", LongType())]
 )
-
-
-def _frontier(seqs: list, procs: list) -> Tuple[Any, int, int]:
-    """(frontier_seq|None, processed_uncheckpointed, in_flight) from the
-    accumulated per-shard record set -- the popProcessedRecords scan."""
-    order = sorted(range(len(seqs)), key=lambda i: seqs[i])
-    frontier = None
-    blocked = False
-    processed_behind = 0
-    in_flight = 0
-    for i in order:
-        if procs[i]:
-            if blocked:
-                processed_behind += 1
-            else:
-                frontier = seqs[i]
-        else:
-            blocked = True
-            in_flight += 1
-    return frontier, processed_behind, in_flight
 
 
 def _advance(
@@ -251,74 +231,3 @@ def streaming_checkpoint_frontier(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# v2: the same tracker on Spark 4's transformWithStateInPandas
-# ---------------------------------------------------------------------------
-def v2_available() -> bool:
-    """transformWithStateInPandas runs a protobuf-based driver worker; gate
-    on both the API and a working protobuf install (absent here)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        from pyspark.sql.streaming import StatefulProcessor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-try:  # pragma: no cover - import guard for older Sparks
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _TrackerProcessor(StatefulProcessor):
-        """ShardCheckpointTracker on the arbitrary-state v2 API
-        (transformWithStateInPandas): identical frontier semantics to
-        ``_track``; the v2 handle adds per-state-variable storage and (not
-        used here) timers for watermark-driven emission."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "tracker",
-                "frontier long, seqs array<long>, procs array<boolean>, n_updates int",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802 - API name
-            if self._state.exists():
-                frontier, seqs_t, procs_t, n_updates = self._state.get()
-                seqs, procs = list(seqs_t), list(procs_t)
-            else:
-                frontier, seqs, procs, n_updates = _NO_FRONTIER, [], [], 0
-            for pdf in rows:
-                seqs.extend(int(s) for s in pdf["seq"])
-                procs.extend(bool(p) for p in pdf["processed"])
-            frontier, seqs, procs, processed_behind, in_flight = _advance(frontier, seqs, procs)
-            n_updates += 1
-            self._state.update((frontier, seqs, procs, n_updates))
-            yield pd.DataFrame(
-                [
-                    {
-                        "shard_id": int(key[0]),
-                        "frontier_seq": None if frontier == _NO_FRONTIER else frontier,
-                        "processed_uncheckpointed_count": processed_behind,
-                        "in_flight_count": in_flight,
-                        "update_id": n_updates,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    def streaming_checkpoint_frontier_v2(df: DataFrame) -> DataFrame:
-        """Tracker on the v2 arbitrary-state API.  Same input/output contract
-        as streaming_checkpoint_frontier."""
-        return df.groupBy("shard_id").transformWithStateInPandas(
-            statefulProcessor=_TrackerProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover
-    streaming_checkpoint_frontier_v2 = None  # type: ignore[assignment]

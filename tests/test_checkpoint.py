@@ -85,13 +85,18 @@ def test_count_trigger_gap_blocked_backlog_does_not_fire(spark):
 
 def test_window_query_matches_tracker_scan_randomized(spark):
     # Cross-implementation invariant: the batch window-SQL frontier
-    # (operators/checkpoint.py) and the stateful tracker's python scan
-    # (streaming/tracker.py::_frontier) implement the SAME semantics.
-    # 200 random (shard, seq, processed) rows, fixed seed.
+    # (operators/checkpoint.py) and the stateful tracker's kernel step
+    # (streaming/tracker.py::_advance, what _track runs per micro-batch)
+    # implement the SAME semantics.  200 random (shard, seq, processed)
+    # rows, fixed seed.
     import random
 
     from kcl_akka_stream_spark.operators.checkpoint import checkpoint_frontier
-    from kcl_akka_stream_spark.streaming.tracker import _frontier
+    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance
+
+    def scan(seqs, procs):
+        frontier, _, _, behind, in_flight = _advance(_NO_FRONTIER, seqs, procs)
+        return (None if frontier == _NO_FRONTIER else frontier, behind, in_flight)
 
     rng = random.Random(42)
     rows = []
@@ -113,7 +118,7 @@ def test_window_query_matches_tracker_scan_randomized(spark):
         per_shard.setdefault(shard, ([], []))
         per_shard[shard][0].append(seq)
         per_shard[shard][1].append(proc)
-    want = {s: _frontier(seqs, procs) for s, (seqs, procs) in per_shard.items()}
+    want = {s: scan(seqs, procs) for s, (seqs, procs) in per_shard.items()}
     assert got == want
 
 

@@ -177,20 +177,24 @@ def test_connected_components_chain_and_singleton(spark):
 
 def test_connected_components_iteration_guard(spark):
     # A pathological long chain propagates the min label ONE hop per
-    # iteration.  ADVICE r15 #1: exhausting the plain budget is a DATA
-    # property, not a bug -- the operator now continues with pointer
-    # jumping (O(log remaining-diameter)) from the current labels and
-    # returns the SAME min-label fixpoint instead of hard-failing.
+    # plain round.  ADVICE r15 #1: exhausting the plain budget is a DATA
+    # property, not a bug -- the loop continues with pointer-jump rounds
+    # (O(log remaining-diameter)) from the current labels and returns the
+    # SAME min-label fixpoint instead of hard-failing.
     import pytest
 
     from kcl_akka_stream_spark.operators.dedup import connected_components
 
+    def chain(n):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+        )
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        return pairs, nodes
+
     n = 12
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    # plain budget 3 << diameter 11: the fallback must converge it anyway
+    pairs, nodes = chain(n)
+    # plain budget 3 << diameter 11: the jump rounds must converge it
     got = {
         r.doc_id: r.cluster_id
         for r in connected_components(pairs, nodes, max_iterations=3).collect()
@@ -202,23 +206,11 @@ def test_connected_components_iteration_guard(spark):
     }
     assert got == {i: 0 for i in range(n)}
     # the loud guard still exists where even pointer jumping cannot
-    # converge within budget (diameter >> 2^max_iterations): _cc_loop
-    # with NO fallback raises rather than returning half-merged labels
-    from kcl_akka_stream_spark.operators.dedup import (
-        _cc_loop,
-        _cc_step_plain,
-        _mirrored_edge_base,
-    )
-
-    edges = _mirrored_edge_base(pairs)
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
+    # converge within budget (diameter 59 >> 2^2): raise rather than
+    # return half-merged labels
+    pairs, nodes = chain(60)
     with pytest.raises(RuntimeError, match="still changing"):
-        _cc_loop(
-            lambda ls: _cc_step_plain(edges, ls), labels, 3,
-            "connected_components",
-        )
+        connected_components(pairs, nodes, max_iterations=2)
 
 
 def test_vectorized_topk_matches_jvm_fold(spark):
@@ -651,53 +643,41 @@ def test_kmeans_assign_ties_break_on_lower_cluster_id(spark):
     assert row.cluster_id == 0  # equal distance -> lower id wins
 
 
-def test_connected_components_fast_log_rounds_and_equivalence(spark):
-    # Pointer jumping converges a 60-deep chain within ~log2(60)+slack
-    # rounds -- the budget that makes the plain operator RAISE.
-    import pytest
-
-    from kcl_akka_stream_spark.operators.dedup import (
-        connected_components,
-        connected_components_fast,
-    )
+def test_connected_components_deep_chain_converges(spark):
+    # ADVICE r15 #1: a 60-deep chain with budget 10 exhausts the plain
+    # rounds; the pointer-jump rounds that follow converge it within
+    # ~log2(60)+slack rounds to the same min-label fixpoint.
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     n = 60
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    # ADVICE r15 #1: the plain operator no longer hard-fails on a
-    # deeper-than-budget chain -- it continues with pointer jumping from
-    # the current labels and converges to the same fixpoint.
     got = {
         r.doc_id: r.cluster_id
         for r in connected_components(pairs, nodes, max_iterations=10).collect()
     }
     assert got == {i: 0 for i in range(n)}
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_fast(pairs, nodes, max_iterations=10).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
 
-    # equivalence with the plain operator on a multi-component graph
-    # (two cliques bridged to nothing + a path + singletons)
-    pairs2 = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21)],
-        "id_a long, id_b long",
-    )
-    nodes2 = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 21, 99)], "doc_id long"
-    )
-    slow = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(pairs2, nodes2).collect()
-    }
-    fast = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_fast(pairs2, nodes2).collect()
-    }
-    assert fast == slow
+
+def test_connected_components_fires_no_count_job(spark, monkeypatch):
+    # Each round's mover count rides the round's checkpoint job as an
+    # observed metric: with DataFrame.count disabled, CC on a chain still
+    # converges (plain rounds) and returns the right labels.  The
+    # DataFrames here are pyspark's classic subclass, which overrides
+    # count, so the patch targets that class.
+    from kcl_akka_stream_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long")
+
+    def no_count(self):
+        raise AssertionError("connected_components fired a count job")
+
+    monkeypatch.setattr(type(pairs), "count", no_count)
+    got = {r.doc_id: r.cluster_id for r in connected_components(pairs, nodes).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):
@@ -963,28 +943,26 @@ def test_cc_stray_endpoint_contract(spark):
     # -- a cluster_id referencing an id not in nodes), while output ROWS
     # are always exactly `nodes`.  validate_pairs=True semi-joins stray
     # edges out, so every cluster_id is then drawn from nodes.
-    from kcl_akka_stream_spark.operators.dedup import (
-        connected_components,
-        connected_components_fast,
-    )
+    from kcl_akka_stream_spark.operators.dedup import connected_components
 
     nodes = spark.createDataFrame([(2,), (3,), (4,)], "doc_id long")
     # pair (1, 2): endpoint 1 is NOT a node; pair (3, 4) is clean
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
 
-    for cc in (connected_components, connected_components_fast):
-        default = {r.doc_id: r.cluster_id for r in cc(pairs, nodes).collect()}
-        # documented default: the stray min label 1 leaks into node 2's
-        # cluster_id; rows are still exactly the node set
-        assert default == {2: 1, 3: 3, 4: 3}
-        strict = {
-            r.doc_id: r.cluster_id
-            for r in cc(pairs, nodes, validate_pairs=True).collect()
-        }
-        # validated: the stray edge drops entirely (both directions),
-        # node 2 is a singleton, every cluster_id is a node id
-        assert strict == {2: 2, 3: 3, 4: 3}
-        assert set(strict.values()) <= {2, 3, 4}
+    default = {
+        r.doc_id: r.cluster_id for r in connected_components(pairs, nodes).collect()
+    }
+    # documented default: the stray min label 1 leaks into node 2's
+    # cluster_id; rows are still exactly the node set
+    assert default == {2: 1, 3: 3, 4: 3}
+    strict = {
+        r.doc_id: r.cluster_id
+        for r in connected_components(pairs, nodes, validate_pairs=True).collect()
+    }
+    # validated: the stray edge drops entirely (both directions),
+    # node 2 is a singleton, every cluster_id is a node id
+    assert strict == {2: 2, 3: 3, 4: 3}
+    assert set(strict.values()) <= {2, 3, 4}
 
 
 def test_range_search_include_self_contract(spark):

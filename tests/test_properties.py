@@ -13,7 +13,7 @@ from kcl_akka_stream_spark.operators.replay import (
     UnexpectedMessageSequence,
     remove_reprocessed_list,
 )
-from kcl_akka_stream_spark.streaming.tracker import _frontier
+from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance
 
 
 # --- replay acceptance ------------------------------------------------------
@@ -92,7 +92,9 @@ def brute_frontier(seqs, procs):
 def test_frontier_matches_brute_force(pairs):
     seqs = [s for s, _ in pairs]
     procs = [p for _, p in pairs]
-    assert _frontier(seqs, procs) == brute_frontier(seqs, procs)
+    frontier, _, _, behind, in_flight = _advance(_NO_FRONTIER, seqs, procs)
+    got = (None if frontier == _NO_FRONTIER else frontier, behind, in_flight)
+    assert got == brute_frontier(seqs, procs)
 
 
 # --- salting equivalence ----------------------------------------------------
@@ -129,8 +131,8 @@ def test_salted_aggregate_equivalence(spark, rows, n_salts):
 # --- compacted tracker vs full-history scan ---------------------------------
 # Under per-shard in-order delivery (the Kinesis contract the reference
 # relies on), iterating the COMPACTING _advance over any batch split must
-# emit exactly what the full-history _frontier computes -- and the retained
-# state must equal the un-acked window.
+# emit exactly what the full-history brute-force scan computes -- and the
+# retained state must equal the un-acked window.
 
 
 @st.composite
@@ -149,8 +151,6 @@ def ordered_batches(draw):
 @given(ordered_batches())
 @settings(max_examples=300, deadline=None)
 def test_advance_iterated_matches_full_history(case):
-    from kcl_akka_stream_spark.streaming.tracker import _NO_FRONTIER, _advance, _frontier
-
     procs, batches = case
     frontier, seqs_kept, procs_kept = _NO_FRONTIER, [], []
     out = None
@@ -169,7 +169,7 @@ def test_advance_iterated_matches_full_history(case):
         assert seqs_kept == window
     if out is not None:
         all_seqs = [s for b in batches for s in b]
-        assert out == _frontier(all_seqs, [procs[s] for s in all_seqs])
+        assert out == brute_frontier(all_seqs, [procs[s] for s in all_seqs])
 
 
 # --- zip-chain gram construction -------------------------------------------

@@ -580,6 +580,24 @@ def test_power_iteration_pc1_finds_planted_direction(spark):
     assert all(abs(out[d]) < 500 for d in range(1, 8)), out
 
 
+def test_power_iteration_pc1_int64_guard_raises(spark, tmp_path):
+    # Covariance entries fit int64 (1e16) but the first power step
+    # w = C v sums 2 x 1e16 x 1000 = 2e19 > 2^63: the exact-int64
+    # equivalence with the all-Spark plan no longer holds, so the query
+    # must raise OverflowError -- a real exception, not an assert that
+    # ``python -O`` strips.
+    import pytest
+
+    from kcl_akka_stream_spark.queries import QUERIES
+
+    spark.createDataFrame(
+        [(0, [100.0, 100.0]), (1, [-100.0, -100.0])],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(OverflowError, match="exceeds int64"):
+        QUERIES["emb_power_iteration_pc1"](spark, str(tmp_path))
+
+
 def test_heaps_law_monotone_and_beta(spark, sf_dir):
     from kcl_akka_stream_spark.queries import QUERIES
 

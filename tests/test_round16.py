@@ -145,6 +145,29 @@ def test_payload_simhash_vectorized_matches_scalar(spark, sf_dir):
     # short payloads (< gram bytes) emit nothing in either form
     assert set(got) == {r.media_id for r in rows if len(bytes(r.payload)) >= 4}
 
+    # binary payloads: NUL-rich grams, including grams that END in NUL
+    # bytes (numpy's fixed-width bytes scalars drop trailing NULs, so the
+    # distinct-gram hash must still see the full gram)
+    import random
+
+    rng = random.Random(16)
+    bins = [
+        b"ab\x00\x00" * 5,
+        b"\x00" * 12,
+        b"\x00\x00\x00\x01ab\x00\x00cd\x00\x00",
+        b"xyz\x00" + b"ab\x00\x00",
+        bytes(rng.choice((0, 0, 0, 1, 97)) for _ in range(64)),
+        bytes(rng.randrange(256) for _ in range(64)),
+    ]
+    bmedia = spark.createDataFrame(
+        list(enumerate(bins)), "media_id long, payload binary"
+    )
+    got = {
+        r.media_id: r.simhash
+        for r in payload_simhash(bmedia, gram=4, stride=2, bits=16).collect()
+    }
+    assert got == {i: scalar(b, stride=2) for i, b in enumerate(bins)}
+
 
 def test_graph_iteration_count_contract(spark):
     # ADVICE r15 #3: the r15 round-1 specialization assigns the score

@@ -425,42 +425,6 @@ def test_two_consumers_disjoint_leases_union_to_sent(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stateful_tracker_v2_gap_blocks_frontier(spark, tmp_path):
-    # Same gap matrix as v1 (ShardCheckpointTrackerTest.scala:70-81) on the
-    # Spark 4 transformWithStateInPandas API.
-    import uuid as _uuid
-
-    from kcl_akka_stream_spark.streaming.tracker import (
-        streaming_checkpoint_frontier_v2,
-        v2_available,
-    )
-
-    if streaming_checkpoint_frontier_v2 is None or not v2_available():
-        pytest.skip("transformWithStateInPandas needs a working protobuf install")
-    rows = [(7, 0, True), (7, 1, True), (7, 2, False), (7, 3, True)]
-    df = spark.createDataFrame(rows, "shard_id long, seq long, processed boolean")
-    src = str(tmp_path / "ckpt_v2_src")
-    df.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    name = f"t_tracker2_{_uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_checkpoint_frontier_v2(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name).orderBy(F.col("update_id").desc()).collect()
-    last = out[0]
-    assert last.frontier_seq == 1
-    assert last.processed_uncheckpointed_count == 1
-    assert last.in_flight_count == 1
-
-
 def test_batch_sessionize_matches_streaming_session_window(spark):
     # Cross-boundary invariant: the batch window-function sessionization
     # (operators/windows.py) and streaming session_window agree on session

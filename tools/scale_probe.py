@@ -1656,7 +1656,7 @@ def wave8_probes(spark, sf_dir: str, repl: int = 10) -> None:
 
     # Keep-best: LSH clusters + one cluster-keyed window.
     from kcl_akka_stream_spark.operators.dedup import (
-        connected_components_fast,
+        connected_components,
         minhash_candidate_pairs,
         minhash_lsh_buckets,
     )
@@ -1664,7 +1664,7 @@ def wave8_probes(spark, sf_dir: str, repl: int = 10) -> None:
     def keep_best(d: DataFrame) -> DataFrame:
         buckets = minhash_lsh_buckets(d, num_hashes=8, bands=4, k=3)
         cand = minhash_candidate_pairs(buckets, max_bucket_size=10)
-        cl = connected_components_fast(cand, d.select("doc_id"))
+        cl = connected_components(cand, d.select("doc_id"))
         j = cl.join(d.select("doc_id", F.length("text").alias("n_chars")), "doc_id")
         w = Window.partitionBy("cluster_id").orderBy(
             F.col("n_chars").desc(), "doc_id"
