@@ -84,7 +84,7 @@ def kmeans_assign(
 
 
 def kmeans_update(
-    vectors: DataFrame,
+    vectors: DataFrame | None,
     assignment: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -93,12 +93,18 @@ def kmeans_update(
     vectors.  posexplode → avg keyed by (cluster, dim) combines map-side;
     the rebuilt centroid arrays are k × d rows total.
 
-    When ``assignment`` already carries ``vec_col``
-    (``kmeans_assign(keep_vector=True)``), the vectors-assignment join is
-    skipped outright (r16, guide §1.2): the assignment has exactly one
-    row per vector id with the identical array, so the posexplode reads
-    it directly -- same rows in, same means out."""
-    if vec_col in assignment.columns:
+    ``vectors`` is joined to the assignment on ``id_col``.  Pass ``None``
+    when the assignment itself carries ``vec_col``
+    (``kmeans_assign(keep_vector=True)``): the join is skipped (r16,
+    guide §1.2), since the assignment has exactly one row per vector id
+    with the identical array -- same rows in, same means out.  ``None``
+    with an assignment lacking ``vec_col`` raises ``ValueError``."""
+    if vectors is None:
+        if vec_col not in assignment.columns:
+            raise ValueError(
+                f"kmeans_update(None, ...) needs the assignment to carry {vec_col!r}; "
+                f"it has {assignment.columns}"
+            )
         joined = assignment.select("cluster_id", vec_col)
     else:
         joined = vectors.join(assignment.select(id_col, "cluster_id"), id_col)

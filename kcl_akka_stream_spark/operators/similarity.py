@@ -196,7 +196,7 @@ def _learn_quantizer(
     ).localCheckpoint(eager=True)
     # kmeans_update reads the carried vector off the assignment (no
     # vectors-assignment join -- see its docstring)
-    centroids = kmeans_update(corpus, assignment, id_col, vec_col).select(
+    centroids = kmeans_update(None, assignment, id_col, vec_col).select(
         F.col("cluster_id").alias("cluster"), "centroid"
     )
     return assignment, centroids
@@ -300,7 +300,7 @@ def semantic_dedup(
     job, no centroid assign): block count scales with the corpus so
     expected per-cluster size stays ~constant.  A FIXED small
     ``n_clusters`` on a growing corpus is the quadratic anti-pattern
-    (tools/scale_probe.py measured 12.5x wall at 10x data for frozen
+    (SCALE_PROBE.md records 12.5x wall at 10x data for frozen
     k=8 vs ~flat for the auto mode); the learned-quantizer mode exists
     for oracle-pinned gates and pre-clustered corpora, the auto mode is
     the 100 TB default."""
@@ -494,8 +494,8 @@ def embedding_near_dup_pairs(
     deterministic guardrail for the skewed tail -- over-cap blocks are
     dropped whole BEFORE pair generation, the same bounded-fan-out
     discipline as the MinHash hot-bucket cap and the Jaccard df-cap
-    (tools/scale_probe.py: uncapped 4-dim blocking went 45x wall at 10x
-    data; capped stays linear).  On the LSH path the per-bucket sizes
+    (an early 10x scale-probe run: uncapped 4-dim blocking went 45x
+    wall at 10x data; capped stays linear).  On the LSH path the per-bucket sizes
     (<= 2^MAX_AUTO_LSH_DIMS rows) are collected driver-side: the kept set
     broadcasts from a local list and the dropped-block count is LOGGED --
     no silent truncation, no second scan for the cap."""

@@ -68,8 +68,22 @@ def test_kmeans_assign_keep_vector_carries_input_unchanged(spark):
             vecs, kept.select("vec_id", "cluster_id")
         ).collect()
     }
-    fast = {r.cluster_id: r.centroid for r in kmeans_update(vecs, kept).collect()}
+    fast = {r.cluster_id: r.centroid for r in kmeans_update(None, kept).collect()}
     assert fast == slow
+
+    def joins(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Join ")
+
+    # a DataFrame is always joined, even when the assignment carries vectors
+    assert joins(kmeans_update(vecs, kept)) == joins(kmeans_update(None, kept)) + 1
+
+
+def test_kmeans_update_without_vectors_needs_carried_vector(spark):
+    from kcl_akka_stream_spark.operators.clustering import kmeans_update
+
+    asg = spark.createDataFrame([(1, 10), (2, 20)], "vec_id long, cluster_id long")
+    with pytest.raises(ValueError, match="embedding"):
+        kmeans_update(None, asg)
 
 
 def test_pq_encode_passthrough_and_dims(spark):
